@@ -1,8 +1,13 @@
 #!/usr/bin/env python
 """Bench harness: warm per-query wall times for the headline queries.
 
-Prints ONE JSON line:
+Prints a JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+and then a compact second line that repeats its contract fields with
+``"compact_repeat": true``. Both lines carry the same ``metric`` name, so
+a consumer that reads every line must drop the ones with
+``compact_repeat`` set, or it counts the suite wall twice.
 
 Protocol (BASELINE.md "Bench protocol implications"):
 - one shared SparkSession (cold JVM start excluded from all timings);

@@ -2552,7 +2552,7 @@ def win_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-visit conversion rate).
 
     Plan: the sessionize lag/running-sum windows (single shuffle on
-    user_id), then funnel_stages' chained min-frontier joins keyed on
+    user_id), then chained min-frontier joins keyed on
     (user_id, session_idx) — each stage one partial-agg'd shuffle whose
     frontier only shrinks. The three stage counts + the session total
     are metadata-sized scalars crossed at the end.

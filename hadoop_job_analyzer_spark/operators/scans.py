@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import COLUMNS, load_table
 from ..registry import query
@@ -135,6 +136,21 @@ def scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _read_back(
+    spark: SparkSession, path: str, schema: StructType, partition_col: str | None = None
+) -> DataFrame:
+    """Read back a parquet directory this process just wrote from
+    ``schema``, so no schema-inference job runs. A ``partitionBy`` output
+    reads its partition column from the directory names, after the file
+    columns, so ``partition_col`` moves to the end of the schema."""
+    if partition_col is not None:
+        schema = StructType(
+            [f for f in schema.fields if f.name != partition_col]
+            + [schema[partition_col]]
+        )
+    return spark.read.schema(schema).parquet(path)
+
+
 @query(
     "sink_parquet_partitioned",
     oracle=f"""
@@ -158,7 +174,9 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value").alias("total_value"))
     )
     agg.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    return spark.read.parquet(out).select("event_type", "n_events", "total_value")
+    return _read_back(spark, out, agg.schema, "event_type").select(
+        "event_type", "n_events", "total_value"
+    )
 
 
 @query(
@@ -274,8 +292,8 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     tidy = os.path.join(_ARTIFACTS, "compact_tidy")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition(64).write.mode("overwrite").parquet(frag)
-    spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(tidy)
-    back = spark.read.parquet(tidy)
+    _read_back(spark, frag, ev.schema).repartition(4).write.mode("overwrite").parquet(tidy)
+    back = _read_back(spark, tidy, ev.schema)
     # n.b. ts survives both hops as µs-timestamps; aggregate on the
     # compacted copy must equal the source-of-truth oracle
     return back.groupBy("event_type").agg(
@@ -455,7 +473,9 @@ def scan_partition_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(_ARTIFACTS, "events_by_type")
     ev = load_table(spark, sf_dir, "events")
     ev.repartition("event_type").write.mode("overwrite").partitionBy("event_type").parquet(out)
-    back = spark.read.parquet(out).where(F.col("event_type") == "purchase")
+    back = _read_back(spark, out, ev.schema, "event_type").where(
+        F.col("event_type") == "purchase"
+    )
     return back.groupBy(F.date_trunc("hour", "ts").alias("ts_hour")).agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").alias("n_users"),

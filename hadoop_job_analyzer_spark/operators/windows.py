@@ -826,36 +826,42 @@ def funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion report every event pipeline ships (and the ordered-
     sequence semantics a naive 3-way distinct-join gets wrong).
 
-    Three chained min-aggregations, each joining the previous stage's
-    (user, ts) frontier — every stage is one partial-agg shuffle on
-    user_id and the frontier tables only shrink. At 100 TB: identical
-    plan, with the event scan pruned to the 3 funnel types by the
-    pushed-down IN filter.
+    One ``user_id`` shuffle: the event scan, pruned to the 3 funnel
+    types, is hash-partitioned by user, and two unordered per-user
+    windows over that one partitioning compute the first click and then
+    the first view strictly after it. A per-user aggregate on the same
+    partitioning (no exchange) reduces each user to three stage flags,
+    and a global count of the flags is the 1-row answer. At 100 TB:
+    identical plan, with the IN filter pushed into the scan; the shuffle
+    carries the funnel rows rather than per-user partials, and a hot
+    user is one task's window buffer (spilled past Spark's window
+    buffer threshold).
+
+    Oracle edge cases kept: comparisons are strict ``>``; a user whose
+    every click has a NULL ``ts`` still counts in ``n_click`` (the
+    oracle's ``COUNT(*)`` over its click groups) but never reaches a
+    later stage; a NULL ``user_id`` is one click group but never joins
+    a later stage.
     """
-    ev = load_table(spark, sf_dir, "events")
-    c = (
-        ev.where(F.col("event_type") == "click")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
+    ev = load_table(spark, sf_dir, "events").where(
+        F.col("event_type").isin("click", "view", "purchase")
     )
-    v = (
-        ev.where(F.col("event_type") == "view")
-        .join(c, "user_id")
-        .where(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_view"))
+    w = Window.partitionBy("user_id")
+    is_click = F.col("event_type") == "click"
+    first_click = F.min(F.when(is_click, F.col("ts"))).over(w)
+    ev = ev.select("user_id", "event_type", "ts", first_click.alias("t_click"))
+    is_view = (F.col("event_type") == "view") & (F.col("ts") > F.col("t_click"))
+    ev = ev.withColumn("t_view", F.min(F.when(is_view, F.col("ts"))).over(w))
+    is_purchase = (F.col("event_type") == "purchase") & (F.col("ts") > F.col("t_view"))
+    users = ev.groupBy("user_id").agg(
+        F.max(is_click).alias("c"),
+        (F.col("user_id").isNotNull() & F.max(F.col("t_view").isNotNull())).alias("v"),
+        (F.col("user_id").isNotNull() & F.max(is_purchase)).alias("p"),
     )
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .join(v, "user_id")
-        .where(F.col("ts") > F.col("t_view"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-    return (
-        c.agg(F.count(F.lit(1)).alias("n_click"))
-        .crossJoin(v.agg(F.count(F.lit(1)).alias("n_click_view")))
-        .crossJoin(p.agg(F.count(F.lit(1)).alias("n_click_view_purchase")))
+    return users.agg(
+        F.count_if("c").alias("n_click"),
+        F.count_if("v").alias("n_click_view"),
+        F.count_if("p").alias("n_click_view_purchase"),
     )
 
 

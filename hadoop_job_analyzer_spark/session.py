@@ -17,6 +17,7 @@ session we did not build.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -61,7 +62,8 @@ def enable_rocksdb_state_store(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# applicationId values already shipped to. Keyed on applicationId, NOT
+# applicationId values already shipped to (or warned about: a failed
+# ship is tried once per application). Keyed on applicationId, NOT
 # id(sc) (ADVICE r7): after a stopped context is GC'd a new context can
 # reuse the same id() and would silently skip addPyFile, reintroducing
 # the worker ModuleNotFoundError this mechanism exists to fix; appIds
@@ -96,6 +98,7 @@ def _ship_package(spark: SparkSession) -> None:
         return  # connect-mode session: no JVM-local context to ship through
     if app_id in _PKG_SHIPPED:
         return
+    _PKG_SHIPPED.add(app_id)
     try:
         pkg_dir = pathlib.Path(__file__).resolve().parent
         staging = pathlib.Path(tempfile.mkdtemp(prefix="hja_pyfiles_"))
@@ -104,12 +107,16 @@ def _ship_package(spark: SparkSession) -> None:
             for p in sorted(pkg_dir.rglob("*.py")):
                 z.write(p, f"{pkg_dir.name}/{p.relative_to(pkg_dir)}")
         sc.addPyFile(str(zip_path))
-        _PKG_SHIPPED.add(app_id)
-    except Exception:
+    except Exception as exc:
         # Shipping is a robustness layer, not a correctness dependency in
         # the driver's own layout (repo-root cwd); never fail a query
-        # over it.
-        pass
+        # over it, but say so: UDF keys may then fail in the workers.
+        warnings.warn(
+            f"could not ship {__package__} to the executors of {app_id} "
+            f"({exc!r}); Python workers must import it from their own path",
+            RuntimeWarning,
+            stacklevel=2,
+        )
 
 
 def apply_session_conf(spark: SparkSession) -> SparkSession:

@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from hadoop_job_analyzer_spark.catalog import COLUMNS, TABLES, load_table
+from hadoop_job_analyzer_spark.catalog import COLUMNS, TABLES, load_table, table_path
 
 SF_ROOT = "/root/testdata"
 
@@ -63,3 +63,107 @@ def test_events_ts_values_sane(spark):
     row = df.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
     assert row["lo"].year == 2024, row
     assert row["hi"].year in (2024, 2025), row
+
+
+# --- Schema memo ------------------------------------------------------
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """Run ``fn`` under a job group; return its result and the number of
+    Spark jobs it submitted (the listener bus is drained first, so a job
+    that ran is always counted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_events(path, ts_unit: str) -> None:
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 3, 1, 12, 0, 0, 123456)
+    n = 8
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [t0 + dt.timedelta(minutes=i) for i in range(n)], pa.timestamp(ts_unit)
+                ),
+                "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
+                "event_type": pa.array(["click"] * n),
+                "value": pa.array([float(i) for i in range(n)]),
+                "props": pa.array(["{}"] * n),
+            }
+        ),
+        str(path),
+    )
+
+
+def test_second_load_of_unchanged_file_runs_no_job(spark, sf_dir, tmp_path):
+    """The first load infers the schema (one job); a second load of the
+    same unchanged file reads with the memo and submits no job."""
+    import shutil
+
+    shutil.copy(table_path(sf_dir, "events"), table_path(str(tmp_path), "events"))
+    first, n_first = _jobs_in_group(
+        spark, "memo-first", lambda: load_table(spark, str(tmp_path), "events")
+    )
+    second, n_second = _jobs_in_group(
+        spark, "memo-second", lambda: load_table(spark, str(tmp_path), "events")
+    )
+    assert n_first >= 1
+    assert n_second == 0
+    assert second.dtypes == first.dtypes == list(PINNED["events"].items())
+
+
+def test_memo_read_still_hits_the_table_cache(spark, sf_dir, tmp_path):
+    """A table cached through the inferred read is still found in the
+    cache by a later schema'd read."""
+    import shutil
+
+    shutil.copy(table_path(sf_dir, "events"), table_path(str(tmp_path), "events"))
+    cached = load_table(spark, str(tmp_path), "events").cache()
+    try:
+        cached.count()
+        df, n_jobs = _jobs_in_group(
+            spark, "memo-cached", lambda: load_table(spark, str(tmp_path), "events")
+        )
+        assert n_jobs == 0
+        plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+        assert "InMemoryRelation" in plan, plan
+    finally:
+        cached.unpersist(blocking=True)
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """The fixture drift case: events.ts rewritten from timestamp[us] to
+    timestamp[ns] in place must be re-inferred (a stale µs schema would
+    fail on the ns file) and still load as the pinned timestamp."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    path = tmp_path / "events.parquet"
+    _write_events(path, "us")
+    before = os.stat(path)
+    us = load_table(spark, str(tmp_path), "events")
+    assert dict(us.dtypes) == PINNED["events"]
+    us_rows = us.orderBy("event_id").collect()
+
+    time.sleep(0.05)  # a later mtime, past the filesystem's clock tick
+    _write_events(path, "ns")
+    after = os.stat(path)
+    assert (before.st_size, before.st_mtime_ns) != (after.st_size, after.st_mtime_ns)
+    ns = load_table(spark, str(tmp_path), "events")
+    assert dict(ns.dtypes) == PINNED["events"]
+    lo = ns.agg(F.min("ts").alias("lo")).collect()[0]["lo"]
+    assert lo.year == 2024, lo
+    assert ns.orderBy("event_id").collect() == us_rows

@@ -101,6 +101,11 @@ def test_fingerprint_has_no_expand_and_parallel_map(plan):
     # gram explode + md5 run once per DISTINCT text (plan prints
     # root-first, so structural assertions use substring PRESENCE,
     # not index order — the prior index-based slices were vacuous)
+    # imported here, not at module level: importing an operator module
+    # before the registry loads them all changes the registration order
+    # the rotation-policy tests in test_registry.py derive windows from
+    from hadoop_job_analyzer_spark.operators.textops import _FP_INROW_MAX_CHARS
+
     p = plan("text_fingerprint")
     # countDistinct folded into dedup-first => no Expand plan
     assert "Expand" not in p
@@ -122,7 +127,7 @@ def test_fingerprint_has_no_expand_and_parallel_map(plan):
     # length(text) <= _FP_INROW_MAX_CHARS — the gate predicate must
     # reach BOTH branch scans (<= on the collapse input, > on the
     # exploded branch) and the two branches union.
-    assert p.count("65536") >= 2, p
+    assert p.count(str(_FP_INROW_MAX_CHARS)) >= 2, p
     assert "Union" in p
     # the collapse pair is the ONLY SortAggregate pair over corpus-sized
     # rows; the second pair (min/max strings) belongs to the beyond-gate

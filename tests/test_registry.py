@@ -18,6 +18,8 @@ import json
 import re
 from pathlib import Path
 
+import pytest
+
 REPO = Path(__file__).resolve().parent.parent
 
 
@@ -351,3 +353,22 @@ def test_operator_modules_import_standalone():
         [sys.executable, "-c", code], capture_output=True, text=True, timeout=120
     )
     assert r.returncode == 0 and "ok" in r.stdout, r.stderr[-2000:]
+
+
+def test_failed_package_ship_warns_once_per_application(spark, monkeypatch):
+    """A failed addPyFile must not pass in silence: one RuntimeWarning per
+    application names the exception, and later queries do not repeat it."""
+    import warnings
+
+    from hadoop_job_analyzer_spark import session
+
+    def refuse(path):
+        raise OSError("ship refused")
+
+    monkeypatch.setattr(session, "_PKG_SHIPPED", set())
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", refuse)
+    with pytest.warns(RuntimeWarning, match="ship refused"):
+        session.apply_session_conf(spark)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        session.apply_session_conf(spark)
